@@ -41,8 +41,14 @@ def audit_row(topic: str, num_messages: int, batch_id: int,
 
 def make_audit_df(spark: SparkSession, topic: str, num_messages: int,
                   batch_id: int, hostname: str | None = None) -> DataFrame:
-    return spark.createDataFrame([audit_row(topic, num_messages, batch_id, hostname)],
-                                 AUDIT_SCHEMA)
+    """The audit row as a one-row local relation.  Built from an Arrow
+    table, so collecting it runs no Spark job; a list of tuples would go
+    through `parallelize` and a Python worker per partition."""
+    import pyarrow as pa
+
+    row = audit_row(topic, num_messages, batch_id, hostname)
+    table = pa.table({name: [v] for name, v in zip(AUDIT_SCHEMA.names, row)})
+    return spark.createDataFrame(table, AUDIT_SCHEMA)
 
 
 def audit_events_for_tracked(df: DataFrame, log_name: str | None = None,

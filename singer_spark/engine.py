@@ -203,6 +203,10 @@ def build_transforms(df: DataFrame, cfg: LogConfig,
     return out
 
 
+# name of the streaming `observe` that counts the messages `run_cycle` reads
+READ_METRIC = "singer_read"
+
+
 class PipelineManager:
     """The DefaultLogMonitor/LogStreamManager analog: owns the query registry."""
 
@@ -409,12 +413,19 @@ class PipelineManager:
                     writer = writer.trigger(processingTime=f"{w.min_upload_seconds} seconds")
             elif cap is not None:
                 # capped unaudited file delivery routes through the same
-                # idempotent per-batch-dir writer (foreachBatch hook)
+                # idempotent per-batch-dir writer (foreachBatch hook).  The
+                # capped batch is persisted because the size estimate and
+                # the save are two actions: uncached, the batch would be
+                # read, capped and counted by `run_cycle` twice
                 path, fmt, size_mb = w.path, w.format, w.max_file_size_mb
 
                 def write_capped(batch_df: DataFrame, batch_id: int) -> None:
-                    sinks.write_batch_idempotent(cap(batch_df), path,
-                                                 batch_id, fmt, size_mb)
+                    capped = cap(batch_df).persist()
+                    try:
+                        sinks.write_batch_idempotent(capped, path,
+                                                     batch_id, fmt, size_mb)
+                    finally:
+                        capped.unpersist()
 
                 writer = (df.writeStream.foreachBatch(write_capped)
                           .option("checkpointLocation", ckpt))
@@ -446,20 +457,27 @@ class PipelineManager:
     def run_cycle(self, cfg: LogConfig, audit_sink=None) -> int:
         """One drain-everything-available cycle (Trigger.AvailableNow against
         the log's checkpoint — resumes where the last cycle stopped).
-        Returns the number of input rows processed."""
+        Returns the number of messages read.
+
+        The count comes from a named `observe` on the source frame, summed
+        over the cycle's progress records.  It rides the batch's own job
+        (no extra action), and it counts decoded messages, where
+        `numInputRows` counts the rows the file source lists — one per
+        file for the `thrift` reader.  Each writer `_build_writer` makes
+        runs one action per batch or persists the batch before several
+        (`sinks.with_audit`, the capped file writer), so each message is
+        counted once."""
         ckpt = cfg.checkpoint_dir or os.path.join(self.checkpoint_root, cfg.name)
-        df = build_transforms(build_source(self.spark, cfg), cfg,
-                              pod_fetcher=self._pod_fetcher_for(cfg))
+        src = build_source(self.spark, cfg).observe(
+            READ_METRIC, F.count(F.lit(1)).alias("messages"))
+        df = build_transforms(src, cfg, pod_fetcher=self._pod_fetcher_for(cfg))
         writer = self._build_writer(cfg, df, ckpt, audit_sink).trigger(availableNow=True)
         query = writer.queryName(cfg.name).start()
         self.queries[cfg.name] = query
         query.awaitTermination()
-        rows = 0
-        for p in query.recentProgress:
-            if isinstance(p, str):
-                p = json.loads(p)
-            rows += int(p.get("numInputRows", 0) or 0)
-        return rows
+        return sum(int(p["observedMetrics"][READ_METRIC]["messages"])
+                   for p in query.recentProgress
+                   if READ_METRIC in (p.get("observedMetrics") or {}))
 
     def run_adaptive(self, cfg: LogConfig, audit_sink=None, cycles: int = 1,
                      sleep_fn=time.sleep) -> list[dict]:

@@ -4,13 +4,17 @@
   and retries are built into the connector.  At-least-once, idempotent
   producer via kafka.enable.idempotence (the reference's transactional mode
   has no Spark analog — documented limitation, SURVEY.md §7.3).
+- Kafka direct (W1/W2/W3 without the connector): `kafka_write_batch` drives
+  a producer per Spark task from the task's Arrow record batches
+  (`mapInArrow`), optionally inside a begin/commit transaction.
 - File/S3 sink (W5): parquet/text writeStream with time-based triggers
   (minUploadTime) and maxRecordsPerFile (size rollover); S3Writer's key
   templating is reproduced by `render_key_template`.
 - Pulsar sink  (W4): no OSS Spark connector — foreachBatch + pulsar-client
-  (import-gated), async send + flush per partition, mirroring PulsarWriter's
-  send-batch/flush/await-futures protocol.  A `client_factory` injection
-  point replaces the reference's producer cache for testing.
+  (import-gated), async send + flush per task over the same Arrow loop,
+  mirroring PulsarWriter's send-batch/flush/await-futures protocol.  A
+  `client_factory` injection point replaces the reference's producer cache
+  for testing.
 - NoOp sink    (W6): format("noop").
 - Memory sink  (tests): format("memory").
 - Audit        (B5/W9): `with_audit` wraps any batch writer in foreachBatch,
@@ -24,7 +28,8 @@ import os
 import re
 import socket
 import uuid as _uuid
-from typing import Callable
+from itertools import repeat
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import DataStreamWriter
@@ -85,9 +90,44 @@ def file_sink(df: DataFrame, path: str, checkpoint_dir: str, fmt: str = "parquet
 
 
 # ---------------------------------------------------------------------------
+# Producer loop shared by the direct Kafka and the Pulsar writers: one
+# `mapInArrow` pass over the selected columns, so each Spark task hands its
+# rows to the client straight from Arrow record batches (no per-row pickled
+# `Row`), and one action that collects each task's sent count.
+# ---------------------------------------------------------------------------
+def _utf8(v):
+    return v.encode("utf-8") if isinstance(v, str) else v
+
+
+def _arrow_rows(batches: Iterator, value_col: str, *optional_cols: str) -> Iterator[tuple]:
+    """Rows of a task's Arrow record batches as tuples of Python values:
+    the value first, then each optional column in order (None when the
+    batch has no such column).  Binary columns come out as bytes and maps
+    as lists of (key, value) pairs."""
+    for batch in batches:
+        names = batch.schema.names
+        cols = [batch.column(value_col).to_pylist()]
+        cols += [batch.column(c).to_pylist() if c in names else repeat(None)
+                 for c in optional_cols]
+        yield from zip(*cols)
+
+
+def _send_per_task(plan: DataFrame, send_task: Callable[[Iterator], int]) -> int:
+    """Run `send_task(record_batches) -> sent` once per Spark task of `plan`
+    and return the total sent.  Exceptions fail the task, so Spark's retry
+    and at-least-once semantics apply."""
+    import pyarrow as pa
+
+    def run(batches):
+        yield pa.RecordBatch.from_pydict({"sent": [send_task(batches)]})
+
+    return sum(r[0] for r in plan.mapInArrow(run, "sent long").collect())
+
+
+# ---------------------------------------------------------------------------
 # Kafka direct writer (W1/W3 twin without the Spark Kafka connector) —
 # foreachBatch + a producer protocol, mirroring the reference's
-# writeLogMessagesInBatch: per partition create/borrow one producer, send
+# writeLogMessagesInBatch: per task create/borrow one producer, send
 # every row (key/value/headers/partition), flush once, surface per-message
 # failures so Spark retries the task (writer/KafkaWriter.java:509-622).
 # `producer_factory(bootstrap_servers, configs)` must return an object with
@@ -113,10 +153,15 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
                       key_col: str = "key", value_col: str = "value",
                       headers_col: str = "headers",
                       partition_col: str = "partition",
-                      transactional: bool = False) -> None:
-    """Write one micro-batch through the producer protocol.  Key, headers
-    (map<string,binary> → [(str, bytes)]), and the partitioner-computed
-    partition id ride along when the columns exist.
+                      transactional: bool = False) -> int:
+    """Write one micro-batch through the producer protocol and return the
+    number of messages sent.  One action: a `mapInArrow` pass over the
+    key/value/headers/partition columns that exist, in which each Spark task
+    opens one producer, sends every row of its Arrow record batches, flushes
+    once, raises if any send's future failed, and closes the producer.  str
+    keys, values and header values are utf-8 encoded; headers
+    (map<string,binary>) go out as [(str, bytes)]; a null key, headers map
+    or partition is left out of the send.
 
     W2 `transactional` mode (CommittableKafkaWriter parity,
     writer/KafkaWriter.java:514-515,584-585,603-604): each task's sends are
@@ -132,15 +177,10 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
     configs = producer_configs or {}
     cols = [c for c in (key_col, value_col, headers_col, partition_col)
             if c in batch_df.columns]
-    plan = batch_df.select(*cols)
-    has_key = key_col in plan.columns
-    has_headers = headers_col in plan.columns
-    has_partition = partition_col in plan.columns
 
-    def send_partition(rows) -> None:
+    def send_task(batches) -> int:
         producer = factory(bootstrap_servers, configs)
         futures = []
-        n = 0
         in_txn = False
         try:
             if transactional:
@@ -149,31 +189,27 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
                     init()
                 producer.begin_transaction()
                 in_txn = True
-            for row in rows:
-                payload = row[value_col]
-                if isinstance(payload, str):
-                    payload = payload.encode("utf-8")
-                kwargs: dict = {"value": bytes(payload)}
-                if has_key and row[key_col] is not None:
-                    k = row[key_col]
-                    kwargs["key"] = k.encode("utf-8") if isinstance(k, str) else bytes(k)
-                if has_headers and row[headers_col] is not None:
-                    kwargs["headers"] = [(hk, bytes(hv) if hv is not None else None)
-                                         for hk, hv in row[headers_col].items()]
-                if has_partition and row[partition_col] is not None:
-                    kwargs["partition"] = int(row[partition_col])
+            for value, key, headers, partition in _arrow_rows(
+                    batches, value_col, key_col, headers_col, partition_col):
+                kwargs: dict = {"value": _utf8(value)}
+                if key is not None:
+                    kwargs["key"] = _utf8(key)
+                if headers is not None:
+                    kwargs["headers"] = [(hk, _utf8(hv)) for hk, hv in headers]
+                if partition is not None:
+                    kwargs["partition"] = partition
                 futures.append(producer.send(topic, **kwargs))
-                n += 1
             producer.flush()
             failed = [f for f in futures
                       if f is not None and getattr(f, "failed", lambda: False)()]
             if failed:
                 raise RuntimeError(
-                    f"kafka sink: {len(failed)}/{n} sends failed "
+                    f"kafka sink: {len(failed)}/{len(futures)} sends failed "
                     f"(first: {getattr(failed[0], 'exception', None)})")
             if in_txn:
                 producer.commit_transaction()
                 in_txn = False
+            return len(futures)
         except BaseException:
             if in_txn:
                 try:
@@ -186,7 +222,7 @@ def kafka_write_batch(batch_df: DataFrame, bootstrap_servers: str, topic: str,
             if close:
                 close()
 
-    plan.foreachPartition(send_partition)
+    return _send_per_task(batch_df.select(*cols), send_task)
 
 
 def kafka_direct_sink(df: DataFrame, bootstrap_servers: str, topic: str,
@@ -511,7 +547,8 @@ def render_key_template(template: str, log_name: str = "", filename: str = "",
 # Pulsar sink (W4) — parity with the reference's PulsarWriter (async send
 # batch → flush → await; producer reuse per task).  OSS Spark has no Pulsar
 # connector, so this is a foreachBatch sink over the pulsar-client library
-# (import-gated); `client_factory(service_url)` must return an object with
+# (import-gated) on the same per-task Arrow loop as the Kafka writer;
+# `client_factory(service_url)` must return an object with
 # `create_producer(topic)` → producer exposing `send_async(data, callback,
 # partition_key=...)` and `flush()` — the real pulsar.Client satisfies this.
 # ---------------------------------------------------------------------------
@@ -529,11 +566,12 @@ def _default_pulsar_client(service_url: str):
 def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
                        client_factory: Callable | None = None,
                        key_col: str = "key", value_col: str = "value",
-                       partition_col: str = "partition") -> None:
-    """Write one (micro-)batch to Pulsar: per partition, open a client,
-    async-send every row, then flush once — the PulsarWriter protocol
-    (send batch + flush + await futures).  Errors raise and fail the task,
-    so Spark's retry/at-least-once semantics apply.
+                       partition_col: str = "partition") -> int:
+    """Write one (micro-)batch to Pulsar and return the number of messages
+    sent: per task, open a client, async-send every row of the task's Arrow
+    record batches, then flush once — the PulsarWriter protocol (send batch
+    + flush + await futures).  Errors raise and fail the task, so Spark's
+    retry/at-least-once semantics apply.
 
     Custom routing (P11): when the DataFrame carries a `partition` column
     (computed by any PARTITIONER_REGISTRY plugin, the analog of the
@@ -546,18 +584,13 @@ def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
     producer's default routing applies (key-hash / round-robin)."""
     factory = client_factory or _default_pulsar_client
     cols = [c for c in (key_col, value_col, partition_col) if c in batch_df.columns]
-    plan = batch_df.select(*cols)
-    has_key = key_col in plan.columns
-    has_partition = partition_col in plan.columns
 
-    def send_partition(rows) -> None:
+    def send_task(batches) -> int:
         client = factory(service_url)
         producers: dict[str, object] = {}
 
-        def producer_for(row):
-            sub = topic
-            if has_partition and row[partition_col] is not None:
-                sub = f"{topic}-partition-{int(row[partition_col])}"
+        def producer_for(partition):
+            sub = topic if partition is None else f"{topic}-partition-{partition}"
             p = producers.get(sub)
             if p is None:
                 p = producers[sub] = client.create_producer(sub)
@@ -576,15 +609,13 @@ def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
 
         try:
             n_sent = 0
-            for row in rows:
-                payload = row[value_col]
-                if isinstance(payload, str):
-                    payload = payload.encode("utf-8")
+            for value, key, partition in _arrow_rows(batches, value_col,
+                                                     key_col, partition_col):
                 kwargs = {}
-                if has_key and row[key_col] is not None:
-                    k = row[key_col]
-                    kwargs["partition_key"] = k if isinstance(k, str) else bytes(k).decode("utf-8", "replace")
-                producer_for(row).send_async(bytes(payload), on_send, **kwargs)
+                if key is not None:
+                    kwargs["partition_key"] = (key if isinstance(key, str)
+                                               else key.decode("utf-8", "replace"))
+                producer_for(partition).send_async(_utf8(value), on_send, **kwargs)
                 n_sent += 1
             for p in producers.values():
                 p.flush()
@@ -592,12 +623,13 @@ def pulsar_write_batch(batch_df: DataFrame, service_url: str, topic: str,
                 raise RuntimeError(
                     f"pulsar sink: {len(failures)}/{n_sent} sends failed "
                     f"(first: {failures[0]})")
+            return n_sent
         finally:
             close = getattr(client, "close", None)
             if close:
                 close()
 
-    plan.foreachPartition(send_partition)
+    return _send_per_task(batch_df.select(*cols), send_task)
 
 
 def pulsar_sink(df: DataFrame, service_url: str, topic: str, checkpoint_dir: str,

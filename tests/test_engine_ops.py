@@ -169,7 +169,9 @@ def test_max_events_per_key_caps_hot_key_e2e(spark, tmp_path):
         f.write("hot-line\n" * 10)
         f.write("cold-one\ncold-two\n")
     mgr = PipelineManager(spark)
-    mgr.run_cycle(cfg)
+    # every line read is counted once, although the capped writer runs
+    # two actions per batch (size estimate, then save)
+    assert mgr.run_cycle(cfg) == 12
     vals = [r.value for r in
             spark.read.parquet(cfg.writer.path).collect()]
     assert vals.count("hot-line") == 3

@@ -9,6 +9,7 @@ from __future__ import annotations
 import glob
 import json
 import os
+import pickle
 import uuid
 
 import pytest
@@ -82,13 +83,21 @@ def test_kafka_write_batch_routes_key_value_headers_partition(spark, tmp_path):
         F.create_map(F.lit("hostname"), F.lit("host-01").cast("binary")).alias("headers"),
         (F.col("id") % 4).cast("int").alias("partition"),
     )
-    kafka_write_batch(df, "broker:9092", "topic-a",
-                      producer_factory=make_fake_producer_factory(out_dir))
+    assert kafka_write_batch(df, "broker:9092", "topic-a",
+                             producer_factory=make_fake_producer_factory(out_dir)) == 20
     delivered = _read_delivered(out_dir)
     assert len(delivered) == 20
     rec = next(r for r in delivered if r["key"] == "7")
     assert rec == {"topic": "topic-a", "key": "7", "value": "payload-7",
                    "headers": {"hostname": "host-01"}, "partition": 3}
+    # str key and value are utf-8 encoded; a frame without headers or
+    # partition columns passes neither to send
+    plain = spark.createDataFrame([("k-é", "v-é")], "key string, value string")
+    assert kafka_write_batch(plain, "broker:9092", "topic-a",
+                             producer_factory=make_fake_producer_factory(out_dir)) == 1
+    rec = next(r for r in _read_delivered(out_dir) if r["key"] == "k-é")
+    assert rec == {"topic": "topic-a", "key": "k-é", "value": "v-é",
+                   "headers": {}, "partition": None}
 
 
 def test_kafka_failed_sends_fail_the_task(spark, tmp_path):
@@ -151,13 +160,96 @@ def test_kafka_streaming_sink_without_audit(spark, tmp_path):
     assert len(_read_delivered(out_dir)) == 30
 
 
+def test_kafka_arrow_loop_null_key_and_null_header_value(spark, tmp_path):
+    seen = str(tmp_path / "seen")
+    os.makedirs(seen)
+
+    class Producer:
+        def send(self, topic, **kwargs):
+            with open(os.path.join(seen, uuid.uuid4().hex), "wb") as f:
+                pickle.dump(kwargs, f)
+
+        def flush(self):
+            pass
+
+    df = spark.createDataFrame(
+        [(None, b"v0", {"h": b"x", "empty": None}, 2),
+         (b"k1", b"v1", None, None)],
+        "key binary, value binary, headers map<string,binary>, partition int")
+    assert kafka_write_batch(df.coalesce(1), "b:9092", "t",
+                             producer_factory=lambda s, c: Producer()) == 2
+    sends = []
+    for name in os.listdir(seen):
+        with open(os.path.join(seen, name), "rb") as f:
+            sends.append(pickle.load(f))
+    by_value = {kw["value"]: kw for kw in sends}
+    # a null key, headers map or partition is left out of the send
+    assert by_value[b"v0"] == {"value": b"v0", "headers": [("h", b"x"), ("empty", None)],
+                               "partition": 2}
+    assert by_value[b"v1"] == {"value": b"v1", "key": b"k1"}
+
+
+def test_kafka_arrow_loop_empty_batch_runs_protocol_without_sends(spark, tmp_path):
+    out_dir = str(tmp_path / "empty")
+    os.makedirs(out_dir)
+    df = spark.range(8).select(F.col("id").cast("string").alias("value")) \
+        .repartition(2).filter(F.col("value") == "none")
+    sent = kafka_write_batch(df, "b:9092", "t", make_txn_producer_factory(out_dir),
+                             transactional=True)
+    assert sent == 0
+    tasks = _txn_events(out_dir)
+    assert len(tasks) == 2  # one producer per task, even an empty one
+    for events in tasks:
+        assert [e[0] for e in events] == ["init", "begin", "flush", "commit"]
+        assert events[-1][1] == []
+
+
+def test_make_audit_df_is_a_local_relation(spark, monkeypatch):
+    from singer_spark import audit as audit_mod
+
+    monkeypatch.setattr(audit_mod.time, "time_ns", lambda: 1_234_567_890)
+    df = audit_mod.make_audit_df(spark, "audit.t", 42, 7, hostname="h-1")
+    assert df.isLocal()
+    assert df.schema == audit_mod.AUDIT_SCHEMA
+    assert tuple(df.collect()[0]) == audit_mod.audit_row("audit.t", 42, 7, "h-1")
+
+
+@pytest.mark.parametrize("audited", [True, False])
+def test_run_cycle_returns_messages_read_not_files(spark, tmp_path, audited):
+    """Three framed-thrift files: run_cycle counts the decoded messages
+    (the thrift file source's numInputRows counts the files)."""
+    log_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "topic")
+    os.makedirs(out_dir)
+    n = write_thrift_log(log_dir, n=23, files=3)
+    cfg = LogConfig(
+        name=f"count_{int(audited)}", log_dir=log_dir, log_stream_regex="thrift.log.*",
+        reader=ReaderConfig(type="thrift"),
+        writer=WriterConfig(type="kafka_direct", topic="t",
+                            bootstrap_servers="broker:9092", num_partitions=4,
+                            audit_topic="audit.t" if audited else None),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    audit = AuditCollector()
+    mgr = PipelineManager(spark,
+                          kafka_producer_factory=make_fake_producer_factory(out_dir))
+    assert mgr.run_cycle(cfg, audit_sink=audit) == n
+    assert len(_read_delivered(out_dir)) == n
+    assert audit.total() == (n if audited else 0)
+    # resumed from the checkpoint: nothing new to read
+    assert mgr.run_cycle(cfg, audit_sink=audit) == 0
+    mgr.stop_all()
+
+
 # ---------------------------------------------------------------------------
 # W2 — transactional (committable) writes.
 # ---------------------------------------------------------------------------
-def make_txn_producer_factory(out_dir: str, fail: bool = False):
+def make_txn_producer_factory(out_dir: str, fail: bool = False,
+                              fail_value: str | None = None):
     """Fake producer recording the transaction protocol: messages become
     visible only on commit_transaction; abort discards them (events logged
-    as JSONL so executor-side calls are observable)."""
+    as JSONL so executor-side calls are observable).  `fail` fails every
+    send, `fail_value` only the send of that value."""
 
     class FakeFuture:
         def __init__(self, ok: bool):
@@ -182,7 +274,7 @@ def make_txn_producer_factory(out_dir: str, fail: bool = False):
 
         def send(self, topic, value=None, key=None, headers=None, partition=None):
             self.pending.append(value.decode("utf-8"))
-            return FakeFuture(ok=not fail)
+            return FakeFuture(ok=not (fail or self.pending[-1] == fail_value))
 
         def flush(self):
             self._log("flush")
@@ -230,16 +322,22 @@ def test_transactional_commit_wraps_each_task(spark, tmp_path):
 
 
 def test_transactional_abort_on_failure(spark, tmp_path):
-    out_dir = str(tmp_path / "txn_fail")
-    os.makedirs(out_dir)
-    df = spark.range(5).select(F.concat(F.lit("m"), F.col("id")).alias("value")).coalesce(1)
-    with pytest.raises(Exception):
-        kafka_write_batch(df, "b:9092", "t",
-                          make_txn_producer_factory(out_dir, fail=True),
-                          transactional=True)
-    aborted = [e for events in _txn_events(out_dir) for e in events if e[0] == "abort"]
-    committed = [e for events in _txn_events(out_dir) for e in events if e[0] == "commit"]
-    assert aborted and not committed  # failed task aborted, nothing visible
+    """Every send failing, or one failing among good ones: the task aborts
+    its transaction, never commits, and the error names the failed count."""
+    df = spark.range(6).select(F.concat(F.lit("m"), F.col("id")).alias("value")).coalesce(1)
+    for name, fail, fail_value, failed in [("all", True, None, 6),
+                                           ("one", False, "m3", 1)]:
+        out_dir = str(tmp_path / f"txn_fail_{name}")
+        os.makedirs(out_dir)
+        with pytest.raises(Exception) as exc_info:
+            kafka_write_batch(df, "b:9092", "t",
+                              make_txn_producer_factory(out_dir, fail, fail_value),
+                              transactional=True)
+        assert f"{failed}/6 sends failed" in str(exc_info.value)
+        events = [e for task in _txn_events(out_dir) for e in task]
+        # failed task aborted, nothing visible
+        assert [e[0] for e in events] == ["init", "begin", "flush", "abort"]
+        assert events[-1][1] == 6
 
 
 # ---------------------------------------------------------------------------

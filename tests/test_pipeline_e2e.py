@@ -33,13 +33,16 @@ def write_rotated_text_logs(log_dir: str, n_files: int = 3, lines_per_file: int 
     return total
 
 
-def write_thrift_log(log_dir: str, n: int = 25) -> int:
+def write_thrift_log(log_dir: str, n: int = 25, files: int = 1) -> int:
+    """Write n framed LogMessages, dealt round-robin over `files` files
+    (`thrift.log` for one file, else `thrift.log.0`, `thrift.log.1`, ...)."""
     os.makedirs(log_dir, exist_ok=True)
-    msgs = [(f"payload-{i}".encode(), str(i).encode(), i * 1000, None, ) for i in range(n)]
     # encode_log_messages takes (message, key, ts, checksum) tuples
-    blob = encode_log_messages([(m, k, t, c) for (m, k, t, c) in msgs])
-    with open(os.path.join(log_dir, "thrift.log"), "wb") as f:
-        f.write(blob)
+    msgs = [(f"payload-{i}".encode(), str(i).encode(), i * 1000, None) for i in range(n)]
+    for part in range(files):
+        name = "thrift.log" if files == 1 else f"thrift.log.{part}"
+        with open(os.path.join(log_dir, name), "wb") as f:
+            f.write(encode_log_messages(msgs[part::files]))
     return n
 
 

@@ -79,10 +79,12 @@ def render_block(fname: str, p: dict) -> str:
     ]
     drift = p.get("drift")
     if drift:
+        # still_slow is a count since round 14; older artifacts list names
+        slow = drift.get("still_slow", 0)
+        n_slow = slow if isinstance(slow, int) else len(slow)
         lines.append(
             f"In-bench drift gate: {drift.get('reran', 0)} re-ran of "
-            f"{drift.get('vs', '?')} compared, "
-            f"{len(drift.get('still_slow', []))} still slow.")
+            f"{drift.get('vs', '?')} compared, {n_slow} still slow.")
     return "\n".join(lines)
 
 
